@@ -3,8 +3,60 @@
 from __future__ import annotations
 
 import os
+import re
+import warnings
 
 from pyspark.sql import SparkSession
+
+# Default driver heap ceiling: the setting the ≥ 32 GiB bench hosts run with.
+DRIVER_MEM_CAP = 16 << 30
+CGROUP_MEMORY_MAX = "/sys/fs/cgroup/memory.max"
+
+
+def usable_memory_bytes() -> int:
+    """Memory this process can use: physical RAM, lowered to the cgroup v2
+    ``memory.max`` limit where that file holds a number (not ``max``)."""
+    usable = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open(CGROUP_MEMORY_MAX) as f:
+            limit = f.read().strip()
+    except OSError:
+        return usable
+    if limit.isdigit():
+        usable = min(usable, int(limit))
+    return usable
+
+
+def _jvm_mem_bytes(value: str) -> int | None:
+    """Bytes in a Spark/JVM memory string ("512m", "16g", "1024"); a bare
+    number is MiB, as Spark reads ``spark.driver.memory``. None when the
+    string is not of that form."""
+    m = re.fullmatch(r"(\d+)([bkmgtp]?)b?", value.strip().lower())
+    if m is None:
+        return None
+    shift = {"b": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+    return int(m.group(1)) << shift[m.group(2) or "m"]
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for a local session: ``SPARK_DRIVER_MEM``
+    unchanged when set (with a warning if it exceeds the usable memory),
+    else half the usable memory, capped at 16g."""
+    usable = usable_memory_bytes()
+    explicit = os.environ.get("SPARK_DRIVER_MEM")
+    if explicit:
+        asked = _jvm_mem_bytes(explicit)
+        if asked is not None and asked > usable:
+            warnings.warn(
+                f"SPARK_DRIVER_MEM={explicit} exceeds the {usable >> 20} MiB "
+                "this process can use; the local JVM may be OOM-killed, which "
+                "surfaces as ConnectionRefusedError on later Spark calls",
+                stacklevel=2)
+        return explicit
+    half = usable // 2
+    if half >= DRIVER_MEM_CAP:
+        return f"{DRIVER_MEM_CAP >> 30}g"
+    return f"{half >> 20}m"
 
 
 def get_spark(app_name: str = "infinitycrawler-spark",
@@ -14,7 +66,14 @@ def get_spark(app_name: str = "infinitycrawler-spark",
     partition coalescing), Arrow on (every UDF is Arrow-vectorized),
     shuffle partitions sized to the parallelism level instead of the
     200 default (local runs would otherwise schedule 200 tiny tasks
-    per shuffle)."""
+    per shuffle).
+
+    The driver heap is ``SPARK_DRIVER_MEM`` when set, else half the memory
+    this process can use (physical RAM or the cgroup v2 limit, whichever is
+    lower), capped at 16g. In local mode this one JVM also runs the
+    executors, and HotSpot's ``MaxDirectMemorySize`` defaults to ``-Xmx``,
+    so heap plus direct buffers may reach 2 × Xmx: half keeps that inside
+    the host, with room left for the Python workers."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -30,7 +89,9 @@ def get_spark(app_name: str = "infinitycrawler-spark",
     # broadcasts of state tables beat shuffles only on paper. Keep Spark
     # defaults; AQE (on by default in 4.x) handles coalescing/skew.
     # shuffle spill on tmpfs: /tmp sits on a virtio disk here, which
-    # serializes shuffle I/O; /dev/shm is a 126 GB tmpfs
+    # serializes shuffle I/O. tmpfs spill lives in the same RAM the
+    # driver heap is sized against (see driver_memory), so heavy spill
+    # competes with the heap; SPARK_LOCAL_DIRS moves it to disk.
     local_dir = os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/spark-local")
     try:
         os.makedirs(local_dir, exist_ok=True)
@@ -53,7 +114,7 @@ def get_spark(app_name: str = "infinitycrawler-spark",
         # analysis (the round loop builds thousands of expressions per
         # round). Pure driver-side error-context nicety; off for speed.
         .config("spark.sql.dataFrameQueryContext.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
